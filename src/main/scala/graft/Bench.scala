@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   *
   * A query that throws is reported as -1 seconds (never as a fake fast
   * timing) and excluded from the total.
+  *
+  * Every run, name-filtered ones included, also writes
+  * `RUN_<sf dir name>.json`: per query and per timed pass, the wall
+  * time and the [[TaskTotals]] (spill, peak task memory, shuffle
+  * volume), with the heap size. On a ScaleProbe replica this is the
+  * memory-pressure record: nonzero spill is a shape bug, not a knob.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,15 +43,18 @@ object Bench {
     val picked =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
+    val totals = new TaskTotals
+    spark.sparkContext.addSparkListener(totals)
     picked.foreach { case (_, fn) =>
       try run(fn(spark, warmDir)) catch { case _: Throwable => () }
     }
+    totals.take(spark.sparkContext) // drop the warmup's totals
     // two timed passes, keep the per-query minimum: the box shows
     // ±30-50% run-to-run noise and min-of-N is the standard estimator
     // for the noise-free cost
     def timeOnce(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame): Double = {
+          org.apache.spark.sql.DataFrame): (Double, TaskTotals.Mb) = {
       // operators that persist() shared subplans (graph edge lists,
       // dedup clusters) register them in the CacheManager, which
       // dedupes by analyzed plan — without this, a repeat pass (or a
@@ -53,16 +62,18 @@ object Bench {
       // previous pass's cache and under-reports the operator's cost
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
-      }
+      val sec =
+        try { run(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+        }
+      (sec, totals.take(spark.sparkContext))
     }
     val sorted = picked.toSeq.sortBy(_._1)
     val pass1 = sorted.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
-    val results = sorted.map { case (n, fn) =>
-      val t2 = timeOnce(n, fn)
-      val t1 = pass1(n)
+    val pass2 = sorted.map { case (n, fn) => n -> timeOnce(n, fn) }.toMap
+    val results = sorted.map { case (n, _) =>
+      val (t1, t2) = (pass1(n)._1, pass2(n)._1)
       n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -71,6 +82,13 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(line)
+    val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
+      .replaceAll("[^A-Za-z0-9._-]", "_")
+    def write(out: String, json: String): Unit = {
+      java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      System.err.println(s"[bench] results written to $out")
+    }
     // the driver's artifact keeps only a 2000-char tail of stdout, which
     // truncates 148 per-query timings (r04 lost 85 of them) — persist
     // the full line to a file as well so every round has a complete
@@ -82,14 +100,20 @@ object Bench {
       // the committed name), so neither the driver's per-round run nor an
       // sf0.01 smoke run can clobber it. Writing the committed artifact
       // requires opting in via SPARK_GRAFT_BENCH_OUT=BENCH_local.json.
-      val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_run_$sfTag.json"))
-      java.nio.file.Files.write(out,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(s"[bench] full results written to $out")
+      write(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_run_$sfTag.json"),
+        line)
     }
+    val runs = for {
+      (pass, p) <- Seq(1 -> pass1, 2 -> pass2)
+      (n, _) <- sorted
+    } yield {
+      val (sec, mb) = p(n)
+      s"""{"query":"$n","pass":$pass,"sec":${math.round(sec * 1000) / 1000.0},""" +
+        mb.jsonFields + "}"
+    }
+    write(s"RUN_$sfTag.json",
+      s"""{"metric":"run","sf":"$sfDir","heap":"${Runtime.getRuntime.maxMemory() >> 20}m",""" +
+        s""""runs":[${runs.mkString(",")}]}""")
     spark.stop()
   }
 }

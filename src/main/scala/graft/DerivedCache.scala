@@ -25,10 +25,16 @@ package graft
   * every bench/oracle INVOCATION still computes everything from the
   * parquet inputs.
   *
-  * Concurrency: same per-key CompletableFuture protocol as
-  * LayoutCache — the (possibly multi-second) compute runs outside any
-  * map bucket lock; losers of the putIfAbsent race block on the
-  * winner's future; a failed compute is uncached so a retry re-runs.
+  * This is graft's one memo: LayoutCache wraps it with tree
+  * allocation and failed-write cleanup, under `graft_lc_`-prefixed
+  * recipes (so a derived recipe must not start with `graft_lc_`).
+  *
+  * Concurrency: per-key FUTURE, not the value itself — the (possibly
+  * multi-second) compute runs outside any map bucket lock (a compute
+  * inside computeIfAbsent would block unrelated keys hashing to the
+  * same bin and deadlock on any re-entrant call); putIfAbsent decides
+  * the single computer in O(1), losers block on the winner's future
+  * only, and a failed compute is uncached so a retry re-runs.
   */
 object DerivedCache {
 
@@ -37,9 +43,8 @@ object DerivedCache {
 
   // keys whose compute THIS thread is currently inside: a same-key
   // re-entrant getOrCompute would block forever on prior.join() of its
-  // own incomplete future — the identical silent deadlock LayoutCache's
-  // getOrWrite guards against (r12 ADVICE item 1). No current compute
-  // recurses; fail fast so a future one can't hang a sweep.
+  // own incomplete future. No current compute recurses; fail fast so a
+  // future one can't hang a sweep.
   private val inFlight = ThreadLocal.withInitial[java.util.HashSet[String]](
     () => new java.util.HashSet[String]())
 
@@ -67,7 +72,4 @@ object DerivedCache {
           throw e
       } finally inFlight.get().remove(key)
   }
-
-  /** Test hook: drop every memoized value (a fresh learn per spec). */
-  private[graft] def clear(): Unit = values.clear()
 }

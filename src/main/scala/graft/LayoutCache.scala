@@ -21,15 +21,6 @@ package graft
   */
 object LayoutCache {
 
-  // Per-key FUTURE, not the path itself: the multi-second Spark write
-  // must run OUTSIDE any ConcurrentHashMap bucket lock (a write lambda
-  // inside computeIfAbsent blocks unrelated recipes hashing to the
-  // same bin and deadlocks on any re-entrant getOrWrite). putIfAbsent
-  // decides the single writer in O(1); losers block on the winner's
-  // future only.
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]()
-
   Runtime.getRuntime.addShutdownHook(new Thread(() => deleteAll()))
 
   /** Return the cached root for `recipe` over `dir`, running `write`
@@ -38,45 +29,21 @@ object LayoutCache {
     * caps, writer options) — two call sites may share a recipe id only
     * if their writes are byte-identical in layout-relevant structure.
     * A failed write is deleted, uncached (a retry re-runs it), and
-    * rethrown to the caller AND any concurrent waiters.
+    * rethrown to the caller AND any concurrent waiters. The memo is
+    * DerivedCache's (one writer per key, the write outside any map
+    * lock, same-key re-entrancy fails fast); the `graft_lc_` recipe
+    * prefix keeps layout keys apart from the derived recipes.
     */
-  // keys whose write THIS thread is currently inside: a same-key
-  // re-entrant getOrWrite would otherwise block forever on its own
-  // incomplete future (prior.join()). No current call path recurses,
-  // but the failure mode is a silent deadlock — fail fast instead
-  // (r11 verdict item 5; makes the documented claim true).
-  private val inFlight = ThreadLocal.withInitial[java.util.HashSet[String]](
-    () => new java.util.HashSet[String]())
-
   def getOrWrite(recipe: String, dir: String)(
-      write: String => Unit): String = {
-    val key = s"$recipe|$dir"
-    if (inFlight.get().contains(key))
-      throw new IllegalStateException(
-        s"re-entrant LayoutCache.getOrWrite for '$key' — the write " +
-          "lambda (transitively) requested its own key, which would " +
-          "deadlock on the in-flight future")
-    val mine = new java.util.concurrent.CompletableFuture[String]()
-    val prior = dirs.putIfAbsent(key, mine)
-    if (prior != null) prior.join()
-    else
-      try {
-        inFlight.get().add(key)
-        val tmp = allocDir(recipe)
-        try { write(tmp) }
-        catch { case e: Throwable => removeTree(tmp); throw e }
-        mine.complete(tmp)
-        tmp
-      } catch {
-        case e: Throwable =>
-          dirs.remove(key, mine)
-          mine.completeExceptionally(e)
-          throw e
-      } finally inFlight.get().remove(key)
-  }
+      write: String => Unit): String =
+    DerivedCache.getOrCompute(s"graft_lc_$recipe", dir) {
+      val tmp = allocDir(recipe)
+      try { write(tmp); tmp }
+      catch { case e: Throwable => removeTree(tmp); throw e }
+    }
 
   // path → how to delete it. Populated by allocDir, drained by
-  // removeTree (failed writes) and deleteAll (shutdown hook / specs).
+  // removeTree (failed writes) and deleteAll (shutdown hook).
   private val deleters =
     new java.util.concurrent.ConcurrentHashMap[String, Runnable]()
 
@@ -136,13 +103,12 @@ object LayoutCache {
     }
   }
 
-  def deleteAll(): Unit = {
+  private def deleteAll(): Unit = {
     // every allocated tree has a deleter; failed writes already ran
     // and removed theirs, so draining the map removes exactly the
     // cached (and any shutdown-interrupted in-flight) trees — local
     // NIO or captured-FS deletes alike, no live SparkSession needed
     deleters.forEach((_, d) => d.run())
     deleters.clear()
-    dirs.clear()
   }
 }

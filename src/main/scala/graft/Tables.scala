@@ -133,8 +133,7 @@ object Tables {
     * recompute winning/washing and the 100× ~60M rows where persist
     * measurably won) — so the 100× win engages without operator
     * action while bench-scale plans keep the idle shape. Every
-    * profile is result-identical (GraphSaturatedSpec pins it);
-    * AuxBench carries the per-side A/B numbers.
+    * profile is result-identical (GraphSaturatedSpec pins it).
     */
   def saturatedSlot(slot: String, df: DataFrame, dir: String): DataFrame = {
     val conf = df.sparkSession.conf

@@ -438,8 +438,8 @@ object Summit {
     annGraphSearch(spark, dir, bits = 6, kGraph = 8, beam = 8,
       hops = 3, k = 3)
 
-  /** The production scale dial (AuxBench `ann_graph_search_auto`, the
-    * `dedup_embedding_auto` pattern): bucket bits from log₂(n) so
+  /** The production scale dial (the `dedupEmbeddingAuto` pattern):
+    * bucket bits from log₂(n) so
     * bucket occupancy — and with it the O(n²/2^bits) graph-build
     * self-join — stays ~`targetOccupancy` at any corpus size: total
     * build cost ≈ n·occupancy cosine evaluations, LINEAR in n. The

@@ -63,8 +63,13 @@ class MisraGriesSpec extends AnyFunSuite {
       .select("doc_id", "text")
     val a = docs.select(col("doc_id").as("id_a"), col("text").as("t_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("text").as("t_b"))
+    // |len_a - len_b| <= levenshtein, so the length band is a necessary
+    // condition of the threshold; checked first, it skips most of the
+    // quadratic edit-distance evaluations without changing the set
     val brute = a.join(b, col("id_a") < col("id_b"))
-      .where(expr("1.0 - levenshtein(t_a, t_b) / " +
+      .where(expr("abs(length(t_a) - length(t_b)) <= " +
+        "0.20005 * greatest(length(t_a), length(t_b)) AND " +
+        "1.0 - levenshtein(t_a, t_b) / " +
         "cast(greatest(length(t_a), length(t_b)) as double) >= 0.79995"))
       .select("id_a", "id_b").collect().map(_.toSeq).toSet
     assert(lsh == brute)
